@@ -25,6 +25,13 @@ object AsOfNative {
       allowExactMatches: Boolean = true,
       toleranceMs: Option[Long] = None
   ): DataFrame = {
+    // Registered lazily, per call, on the caller's session rather than
+    // once through SparkSessionExtensions: sessions this library does not
+    // build (spark-shell, an embedding harness's own builder) never see a
+    // `spark.sql.extensions` setting, and `sbt compile` output carries no
+    // `src/main/resources`, so a META-INF/services provider would not
+    // reach a classes-directory classpath either. Without the strategy,
+    // AsOfJoinPlan has no physical plan. Both calls are idempotent.
     GraftBridge.injectStrategy(left, AsOfStrategy)
     GraftBridge.injectOptimization(left, graft.plans.AsOfFilterPushdown)
     val lp = GraftBridge.logicalPlan(left)

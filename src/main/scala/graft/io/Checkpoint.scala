@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.exprs.JsonEscape.quote
+
 /** Checkpoint-resumable partitioned batch writes with per-partition
   * lineage + metrics (north rule: "resumable from checkpoint with
   * per-partition lineage and row-count/skew metrics").
@@ -89,7 +91,7 @@ object Checkpoint {
 
     def commit(b: Int, rows: Long): Unit = {
       val entry =
-        s"""{"bucket":$b,"rows":$rows,"input":"$input","run_id":"$runId"}"""
+        s"""{"bucket":$b,"rows":$rows,"input":${quote(input)},"run_id":${quote(runId)}}"""
       val tmp = manifestDir(out).resolve(s".bucket-$b.json.$runId.tmp")
       Files.writeString(tmp, entry)
       // createLink, not ATOMIC_MOVE: POSIX rename REPLACES an existing

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.{GraftSession, Pipeline}
+import graft.exprs.JsonEscape.quote
 import graft.io.Checkpoint
 import graft.metrics.Lineage
 
@@ -35,7 +36,7 @@ object FeatureBackfillJob {
     val metrics = obs.get
     val (bucketRows, skew) = Checkpoint.metrics(outDir)
     println(
-      s"""{"run_id":"$runId","input":"$sfDir","out":"$outDir","buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics.getOrElse("rows", -1)},"null_ts":${metrics.getOrElse("null_ts", -1)},"bucket_skew":${f"$skew%.3f"}}"""
+      s"""{"run_id":${quote(runId)},"input":${quote(sfDir)},"out":${quote(outDir)},"buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics.getOrElse("rows", -1)},"null_ts":${metrics.getOrElse("null_ts", -1)},"bucket_skew":${f"$skew%.3f"}}"""
     )
     spark.stop()
   }

@@ -616,34 +616,6 @@ object Curation {
       .drop("__gchunk", "__gwithin", "__gcarry", "__gn")
   }
 
-  /** Single-window reference formulation of [[packShards]] — one task per
-    * stratum, kept as the differential-test twin (CurationSpec asserts
-    * byte-equality with the two-phase default on random inputs) and for
-    * callers with many small strata who want the simpler plan.
-    */
-  def packShardsSingleWindow(
-      df: DataFrame,
-      strataCol: String,
-      orderCol: String,
-      tokens: Column,
-      budgetTokens: Long
-  ): DataFrame = {
-    require(budgetTokens > 0, "budgetTokens must be positive")
-    require(!df.columns.contains("n_tokens") &&
-      !df.columns.contains("shard_seq"),
-      "packShards reserves the column names n_tokens and shard_seq")
-    val guarded = when(tokens >= 0L, tokens).otherwise(raise_error(concat(
-      lit("packShards: negative token count "), tokens.cast("string"),
-      lit(" — token counts must be >= 0"))))
-    val w = Window.partitionBy(col(strataCol)).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("n_tokens", guarded)
-      .withColumn("shard_seq",
-        call_function("div",
-          coalesce(sum(col("n_tokens")).over(w), lit(0L)),
-          lit(budgetTokens)).cast("long"))
-  }
-
   /** [[packShards]] plus each document's [start, end) TOKEN OFFSETS
     * within its shard — the attention-mask boundary table for packed
     * pretraining: trainers that concatenate documents into one sequence

@@ -56,12 +56,6 @@ object Dedup {
     when(size(ws) < k, array().cast("array<string>")).otherwise(joined)
   }
 
-  /** MinHash component j: min over shingles of the first 8 md5 hex chars of
-    * `j|shingle`. String min == numeric min (fixed-width hex).
-    */
-  def minhashComponent(sh: Column, j: Int): Column =
-    array_min(transform(sh, s => substring(md5s(concat(lit(s"$j|"), s)), 1, 8)))
-
   /** All k MinHash components in ONE traversal of the shingle array.
     *
     * Hash economy: one md5 yields 32 hex chars = FOUR independent 8-hex

@@ -53,19 +53,6 @@ object Layout {
     terms.reduce(_ bitwiseOR _)
   }
 
-  /** Reference (row-at-a-time) interleave for the differential property
-    * test — same contract as [[zorderKey]].
-    */
-  def zorderRef(vals: Seq[Long], bits: Int): Long = {
-    require(vals.nonEmpty && bits > 0 && vals.size * bits <= 63)
-    val n = vals.size
-    vals.zipWithIndex.foldLeft(0L) { case (acc, (v, d)) =>
-      require(v >= 0 && v < (1L << bits), s"out of range: $v")
-      (0 until bits).foldLeft(acc)((a, i) =>
-        a | (((v >>> i) & 1L) << (i * n + d)))
-    }
-  }
-
   /** The skipping manifest: one row per z-bucket (`zorderKey >> shift` —
     * at production scale, per FILE of the z-sorted layout) carrying the
     * row count and each dimension's min/max. This is exactly the stats

@@ -346,41 +346,6 @@ object Stats {
           .otherwise(col("__vref")).as("v_norm"))
   }
 
-  /** Single-window reference formulation (`row_number` per group — one
-    * task per group): the differential-test twin of
-    * [[exactGroupedQuantiles]] and the documented rank contract, value at
-    * rank ceil(q·n) in (value, tieCol) order.
-    */
-  def exactGroupedQuantilesSingleWindow(
-      df: DataFrame,
-      groupCol: String,
-      value: Column,
-      tieCol: String,
-      qsBp: Seq[Int]
-  ): DataFrame = {
-    require(qsBp.nonEmpty && qsBp.forall(q => q > 0 && q <= 10000),
-      "quantiles are basis points in 1..10000")
-    require(qsBp.distinct.size == qsBp.size,
-      s"duplicate quantile levels would produce duplicate output columns: " +
-        qsBp.mkString(", "))
-    require(!Seq("__v", "__rn", "__n").exists(df.columns.contains),
-      "exactGroupedQuantiles reserves the column names __v, __rn, __n")
-    val w = Window.partitionBy(col(groupCol)).orderBy(value, col(tieCol))
-    val wAll = Window.partitionBy(col(groupCol))
-    val ranked = df
-      .withColumn("__v", value)
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(wAll))
-    val picks = qsBp.map { q =>
-      val qn = lit(q.toLong) * col("__n")
-      val isPick = col("__rn") * 10000L >= qn &&
-        (col("__rn") - 1L) * 10000L < qn
-      max(when(isPick, col("__v"))).as(s"q$q")
-    }
-    ranked.groupBy(col(groupCol))
-      .agg(max(col("__n")).as("n"), picks: _*)
-  }
-
   /** Exact per-group top-k ("the k best documents of every language"),
     * MEGA-GROUP SAFE. The obvious `row_number().over(partitionBy(group))`
     * sorts a dominant group in one task; instead the selection runs

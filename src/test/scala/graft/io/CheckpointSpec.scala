@@ -32,6 +32,29 @@ class CheckpointSpec extends AnyFunSuite {
     assert(Checkpoint.read(spark, out).count() == df.count())
   }
 
+  test("manifest entries stay valid JSON when the input path holds " +
+    "quotes and backslashes") {
+    val df = TranscriptGen.generateDF(spark, 30)
+    val out = tmp()
+    val input = """in/"quoted" dir\with\backslash "rows":7"""
+    Checkpoint.write(df, "conv_id", out, nBuckets = 4,
+      input = input, runId = "esc1")
+    val manifest = spark.read.json(s"$out/_manifest")
+    assert(!manifest.columns.contains("_corrupt_record"),
+      "a manifest entry is not valid JSON")
+    val entries = manifest.select("bucket", "rows", "input", "run_id")
+      .as[(Long, Long, String, String)].collect()
+    assert(entries.map(_._3).toSet == Set(input))
+    assert(entries.map(_._4).toSet == Set("esc1"))
+    val (rows, _) = Checkpoint.metrics(out)
+    assert(rows == entries.map(e => e._1.toInt -> e._2).toMap)
+    val readBack = spark.read.option("basePath", out)
+      .parquet(s"$out/bucket=*").groupBy("bucket").count()
+      .as[(Int, Long)].collect().toMap
+    assert(rows.filter(_._2 > 0) == readBack)
+    assert(rows.values.sum == df.count())
+  }
+
   test("invalidate recomputes exactly the chosen buckets (repair path)") {
     val df = TranscriptGen.generateDF(spark, 50)
     val out = tmp()

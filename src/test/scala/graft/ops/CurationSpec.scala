@@ -2,6 +2,8 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -206,7 +208,7 @@ class CurationSpec extends AnyFunSuite {
       .select("doc_id", "n_tokens", "shard_seq")
       .as[(Long, Long, Long)].collect()
       .map { case (id, n, s) => id -> (n, s) }.toMap
-    val single = Curation.packShardsSingleWindow(
+    val single = CurationSpec.packShardsSingleWindow(
       df, "lang", "doc_id", col("tok"), 1000L)
       .select("doc_id", "n_tokens", "shard_seq")
       .as[(Long, Long, Long)].collect()
@@ -262,7 +264,7 @@ class CurationSpec extends AnyFunSuite {
     val twoPhase = Curation.packShards(
       df, "lang", "sk", col("tok"), 1000L, chunkSpan = 1L << 48)
       .select("doc_id", "shard_seq").as[(Long, Long)].collect().toMap
-    val single = Curation.packShardsSingleWindow(
+    val single = CurationSpec.packShardsSingleWindow(
       df, "lang", "sk", col("tok"), 1000L)
       .select("doc_id", "shard_seq").as[(Long, Long)].collect().toMap
     assert(twoPhase == single)
@@ -295,7 +297,7 @@ class CurationSpec extends AnyFunSuite {
     val got = Stats.exactGroupedQuantiles(
       df, "g", col("v"), "id", qs, chunkSpan = 97L)
       .orderBy("g").collect().map(_.toSeq).toSeq
-    val want = Stats.exactGroupedQuantilesSingleWindow(
+    val want = CurationSpec.exactGroupedQuantilesSingleWindow(
       df, "g", col("v"), "id", qs)
       .orderBy("g").collect().map(_.toSeq).toSeq
     assert(got == want, s"got=$got want=$want")
@@ -636,5 +638,71 @@ class CurationSpec extends AnyFunSuite {
     val gt = Curation.coverageSelect(tie, "doc_id", "text", k = 2)
       .as[(Int, Long, Long)].collect().toSeq
     assert(gt == Seq((1, 10L, 2L))) // 11 adds nothing after the tie pick
+  }
+}
+
+/** Single-window reference formulations the two-phase operators are
+  * compared against. Each runs one window partition per stratum or group,
+  * so a dominant one lands in one task; they exist only as differential
+  * twins.
+  */
+object CurationSpec {
+
+  /** [[Curation.packShards]] as one exclusive cumsum per stratum. */
+  def packShardsSingleWindow(
+      df: DataFrame,
+      strataCol: String,
+      orderCol: String,
+      tokens: Column,
+      budgetTokens: Long
+  ): DataFrame = {
+    require(budgetTokens > 0, "budgetTokens must be positive")
+    require(!df.columns.contains("n_tokens") &&
+      !df.columns.contains("shard_seq"),
+      "packShards reserves the column names n_tokens and shard_seq")
+    val guarded = when(tokens >= 0L, tokens).otherwise(raise_error(concat(
+      lit("packShards: negative token count "), tokens.cast("string"),
+      lit(" — token counts must be >= 0"))))
+    val w = Window.partitionBy(col(strataCol)).orderBy(col(orderCol))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    df.withColumn("n_tokens", guarded)
+      .withColumn("shard_seq",
+        call_function("div",
+          coalesce(sum(col("n_tokens")).over(w), lit(0L)),
+          lit(budgetTokens)).cast("long"))
+  }
+
+  /** [[Stats.exactGroupedQuantiles]] as `row_number` per group — the
+    * documented rank contract, value at rank ceil(q·n) in (value, tieCol)
+    * order.
+    */
+  def exactGroupedQuantilesSingleWindow(
+      df: DataFrame,
+      groupCol: String,
+      value: Column,
+      tieCol: String,
+      qsBp: Seq[Int]
+  ): DataFrame = {
+    require(qsBp.nonEmpty && qsBp.forall(q => q > 0 && q <= 10000),
+      "quantiles are basis points in 1..10000")
+    require(qsBp.distinct.size == qsBp.size,
+      s"duplicate quantile levels would produce duplicate output columns: " +
+        qsBp.mkString(", "))
+    require(!Seq("__v", "__rn", "__n").exists(df.columns.contains),
+      "exactGroupedQuantiles reserves the column names __v, __rn, __n")
+    val w = Window.partitionBy(col(groupCol)).orderBy(value, col(tieCol))
+    val wAll = Window.partitionBy(col(groupCol))
+    val ranked = df
+      .withColumn("__v", value)
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__n", count(lit(1)).over(wAll))
+    val picks = qsBp.map { q =>
+      val qn = lit(q.toLong) * col("__n")
+      val isPick = col("__rn") * 10000L >= qn &&
+        (col("__rn") - 1L) * 10000L < qn
+      max(when(isPick, col("__v"))).as(s"q$q")
+    }
+    ranked.groupBy(col(groupCol))
+      .agg(max(col("__n")).as("n"), picks: _*)
   }
 }

@@ -19,7 +19,7 @@ class LayoutSpec extends AnyFunSuite {
         Layout.zorderKey(Seq(col("a"), col("b")), 10).as("z"))
       .as[(Long, Long, Long)].collect()
     got2.foreach { case (a, b, z) =>
-      assert(z == Layout.zorderRef(Seq(a, b), 10), s"($a, $b)")
+      assert(z == LayoutSpec.zorderRef(Seq(a, b), 10), s"($a, $b)")
     }
     val rows3 = Seq.fill(200)((rnd.nextInt(128).toLong,
       rnd.nextInt(128).toLong, rnd.nextInt(128).toLong))
@@ -28,7 +28,7 @@ class LayoutSpec extends AnyFunSuite {
         Layout.zorderKey(Seq(col("a"), col("b"), col("c")), 7).as("z"))
       .as[(Long, Long, Long, Long)].collect()
     got3.foreach { case (a, b, c, z) =>
-      assert(z == Layout.zorderRef(Seq(a, b, c), 7), s"($a, $b, $c)")
+      assert(z == LayoutSpec.zorderRef(Seq(a, b, c), 7), s"($a, $b, $c)")
     }
   }
 
@@ -192,5 +192,21 @@ class LayoutSpec extends AnyFunSuite {
     val got = spark.read.parquet(out).select($"id", $"part", $"v")
       .as[(Long, String, Long)].collect().toSet
     assert(got == rows.toSet)
+  }
+}
+
+object LayoutSpec {
+
+  /** Row-at-a-time interleave — the reference for [[Layout.zorderKey]],
+    * same contract.
+    */
+  def zorderRef(vals: Seq[Long], bits: Int): Long = {
+    require(vals.nonEmpty && bits > 0 && vals.size * bits <= 63)
+    val n = vals.size
+    vals.zipWithIndex.foldLeft(0L) { case (acc, (v, d)) =>
+      require(v >= 0 && v < (1L << bits), s"out of range: $v")
+      (0 until bits).foldLeft(acc)((a, i) =>
+        a | (((v >>> i) & 1L) << (i * n + d)))
+    }
   }
 }
