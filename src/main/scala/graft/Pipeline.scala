@@ -16,8 +16,11 @@ import graft.rules.VRule._
   *
   * Plan shape at scale: the gate is a narrow projection fused into the
   * scan; all window features share one (conv_id)-partitioned sort; the
-  * as-of is one additional union-merge on the same key. Two shuffles total
-  * regardless of feature count.
+  * as-of is the native sort-merge exec ([[AsOfNative.joinBackward]]) on
+  * the same key. Its observation side adds two exchanges of its own (the
+  * per-(conv_id, ts) collapse, then conv_id clustering for the merge), so
+  * the benchmark's plan trace counts 3 exchanges on `uniform`, whatever
+  * the number of window features.
   */
 object Pipeline {
 

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.compile.WaryGate
 import graft.exprs.SimHash64
@@ -79,6 +81,89 @@ object SparkEntry {
       .foreach(s.catalog.dropTempView(_))
     s"$prefix${System.nanoTime()}"
   }
+
+  // The streaming replays share one file-source protocol: stage the input
+  // as mtime-ordered parquet chunks (ReplayChunks), read the watched
+  // directory one file per micro-batch (replayStream), and drain one
+  // AvailableNow query under the replay partition count (runReplay).
+
+  /** Shuffle partitions of every streaming replay. A stateful operator's
+    * parallelism (= its state-store count) is frozen from
+    * `spark.sql.shuffle.partitions` at query start, and every micro-batch
+    * commits every store, so a replay pays O(batches × partitions) state
+    * file operations whatever its data volume. 8 is sized for the key
+    * cardinality of the test scale factors (sf0.001–sf0.1), not for the
+    * session's batch queries; deriving it from the input is still open.
+    */
+  private val ReplayShufflePartitions = 8
+
+  /** Modification time of replay file `slot`: chunks take slots 1..n and
+    * sentinel files the slots after them, so they arrive in that order.
+    */
+  private def replayMtime(slot: Int): Long = 1700000000000L + slot * 10000L
+
+  /** Stage: `df` cut into `n` replay chunks by `order` — ntile over the
+    * rows, or with `cohorts` over the distinct `order` values, so an
+    * equal-key cohort never straddles a micro-batch. The cut is
+    * checkpointed once, so every chunk write shares the single-task
+    * replay sort (a replay coordinator's cost; production streams arrive
+    * already ordered).
+    */
+  private final class ReplayChunks(
+      df: DataFrame, val n: Int, order: Seq[String], cohorts: Boolean = false) {
+    private val chunked = {
+      def cut(d: DataFrame): DataFrame = d.withColumn("__chunk",
+        ntile(n).over(org.apache.spark.sql.expressions.Window
+          .orderBy(order.map(col): _*)))
+      val withChunk =
+        if (!cohorts) cut(df)
+        else df.join(cut(df.select(order.map(col): _*).distinct()), order)
+          .select((df.columns :+ "__chunk").map(col): _*)
+      withChunk.localCheckpoint(false)
+    }
+
+    /** The staged files' schema: the replay stream's read schema. */
+    val schema: StructType = chunked.drop("__chunk").schema
+
+    /** Stages chunks `ids` into `watched` as `chunk-$i.parquet` at mtime
+      * slot i (each written through scratch dir `$scratch$i`); returns
+      * [[schema]].
+      */
+    def stage(scratch: String, watched: String,
+        ids: Seq[Int] = 1 to n): StructType = {
+      ids.foreach { i =>
+        stageOrderedFile(chunked.filter(col("__chunk") === i).drop("__chunk"),
+          s"$scratch$i", watched, s"chunk-$i.parquet", replayMtime(i))
+      }
+      schema
+    }
+  }
+
+  /** Read: the watched directory as a file stream, one file per batch. */
+  private def replayStream(
+      s: SparkSession, schema: StructType, watched: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(watched)
+
+  /** `body` under [[ReplayShufflePartitions]], restoring the session's
+    * setting after; queries started in it keep the replay count.
+    */
+  private def withReplayPartitions[T](s: SparkSession)(body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions",
+      ReplayShufflePartitions.toString)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Starts `writer` as one AvailableNow query and drains it. */
+  private def drainAvailableNow(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** Run: [[drainAvailableNow]] under the replay partition count. */
+  private def runReplay(s: SparkSession)(writer: => DataStreamWriter[_]): Unit =
+    withReplayPartitions(s)(drainAvailableNow(writer))
 
   // ------------------------------------------------------------- queries
 
@@ -1390,18 +1475,10 @@ object SparkEntry {
       val maxTs = rows.iterator.map(_.ts.getTime).max
       val input = MemoryStream[TurnEvent]
       val name = freshStreamView(s, "stream_sessions_")
-      // The stateful operator's parallelism (= state-store count) is
-      // frozen from shuffle.partitions at query start; per-batch state
-      // checkpointing costs O(batches × partitions) file ops, so pin a
-      // partition count sized for the key cardinality of this replay
-      // rather than the session-wide default.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try StreamingFeatures.sessionize(input.toDS(), gapSeconds = 1800L)
+      val q = withReplayPartitions(s)(
+        StreamingFeatures.sessionize(input.toDS(), gapSeconds = 1800L)
           .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .queryName(name).start())
       try {
         val chunk = math.max(1, (rows.length + 2) / 3)
         rows.grouped(chunk).foreach { g =>
@@ -1442,17 +1519,8 @@ object SparkEntry {
       // ts-ordered across batches (the operator's cross-batch contract);
       // the single-partition sort is replay-harness-only, like any replay
       // coordinator — production streams arrive already time-ordered
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      val base = 1700000000000L
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet", base + i * 10000L)
-      }
+      val chunks = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+      chunks.stage(s"$tmp/scratch", watched)
       // sentinel events: gap + watermark + margin beyond max ts, twice
       // (the watermark updates BETWEEN batches, so the second sentinel's
       // batch is the one that sees tails expired)
@@ -1463,26 +1531,15 @@ object SparkEntry {
           Seq(TurnEvent("__wm__", i - 1, "user",
             new java.sql.Timestamp(maxTs + i * step))).toDS().toDF(),
           s"$tmp/scratch_wm$i", watched, s"wm-$i.parquet",
-          base + (nChunks + i) * 10000L)
+          replayMtime(chunks.n + i))
       }
       val name = freshStreamView(s, "stream_sessions_files_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnEvent]
-          StreamingFeatures.sessionize(src, gapSeconds = 1800L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.sessionize(
+          replayStream(s, chunks.schema, watched).as[TurnEvent],
+          gapSeconds = 1800L)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).filter($"conv_id" =!= "__wm__")
         .select("conv_id", "session_seq", "n_turns", "session_start",
           "session_end")
@@ -1503,35 +1560,14 @@ object SparkEntry {
         .createTempDirectory("graft_verify_streamlocf").toString
       val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_locf_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnToolEvent]
-          StreamingFeatures.locf(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.locf(
+          replayStream(s, schema, watched).as[TurnToolEvent])
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select("conv_id", "turn_idx", "tool_locf")
     }),
 
@@ -1548,35 +1584,14 @@ object SparkEntry {
         .createTempDirectory("graft_verify_streamlocfttl").toString
       val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_locf_ttl_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnToolEvent]
-          StreamingFeatures.locfTtl(src, ttlSeconds = 900L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.locfTtl(
+          replayStream(s, schema, watched).as[TurnToolEvent], ttlSeconds = 900L)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select("conv_id", "turn_idx", "tool_ttl")
     }),
 
@@ -1592,36 +1607,15 @@ object SparkEntry {
         .createTempDirectory("graft_verify_streamsesscap").toString
       val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_sess_capped_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnEvent]
-          StreamingFeatures.sessionizeCapped(src,
-              gapSeconds = 1800L, maxSeconds = 1200L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.sessionizeCapped(
+          replayStream(s, schema, watched).as[TurnEvent],
+          gapSeconds = 1800L, maxSeconds = 1200L)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select("conv_id", "turn_idx", "session_seq",
         "slice_seq", "capped_session_id")
     }),
@@ -1652,38 +1646,14 @@ object SparkEntry {
         .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
           $"value", $"ts")
       val tagged = anchors.unionByName(feed)
-      val nChunks = 4
-      val epochs = tagged.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = tagged.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"src", $"turn_idx", $"value", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(tagged, 4, Seq("ts"), cohorts = true)
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_asof_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[AsOfEvent]
-          StreamingFeatures.asOfBackward(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.asOfBackward(
+          replayStream(s, schema, watched).as[AsOfEvent])
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select("conv_id", "turn_idx", "tool_asof")
     }),
 
@@ -1711,20 +1681,8 @@ object SparkEntry {
         .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
           $"value", $"ts")
       val tagged = anchors.unionByName(feed)
-      val nChunks = 4
-      val epochs = tagged.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = tagged.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"src", $"turn_idx", $"value", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val chunks = new ReplayChunks(tagged, 4, Seq("ts"), cohorts = true)
+      chunks.stage(s"$tmp/scratch", watched)
       // the sentinel file lands LAST: one far-future null observation per
       // conversation that has anchors
       val sentinel = anchors.select($"conv_id").distinct()
@@ -1732,25 +1690,13 @@ object SparkEntry {
           lit(null).cast("string").as("value"),
           lit("2100-01-01 00:00:00").cast("timestamp").as("ts"))
       stageOrderedFile(sentinel, s"$tmp/scratch_sent", watched,
-        "chunk-sentinel.parquet", 1700000000000L + (nChunks + 1) * 10000L)
+        "chunk-sentinel.parquet", replayMtime(chunks.n + 1))
       val name = freshStreamView(s, "stream_asof_fwd_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[AsOfEvent]
-          StreamingFeatures.asOfForward(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.asOfForward(
+          replayStream(s, chunks.schema, watched).as[AsOfEvent])
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select($"conv_id", $"turn_idx",
         $"tool_asof".as("next_tool"))
     }),
@@ -1769,38 +1715,14 @@ object SparkEntry {
       val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role",
         octet_length($"text").cast("long").as("label"), $"ts")
-      val nChunks = 4
-      val epochs = t.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = t.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"turn_idx", $"role", $"label", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(t, 4, Seq("ts"), cohorts = true)
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_encode_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnLabelEvent]
-          StreamingFeatures.targetEncode(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.targetEncode(
+          replayStream(s, schema, watched).as[TurnLabelEvent])
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select("conv_id", "turn_idx", "role", "enc_cnt", "enc_sum")
     }),
 
@@ -1821,43 +1743,22 @@ object SparkEntry {
       val watched = s"$tmp/watched"
       val t = turns(s, dir).filter($"ts".isNotNull).select($"role", $"ts")
       val maxTs = t.agg(max($"ts")).head().getTimestamp(0).getTime
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("role"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val chunks = new ReplayChunks(t, 4, Seq("ts", "role"))
+      chunks.stage(s"$tmp/scratch", watched)
       // transcript roles are a fixed enum; one sentinel per role flushes
       // every key's tail bucket
       val sentinel = Seq("user", "assistant", "system", "tool")
         .map(r => (r, new java.sql.Timestamp(maxTs + 86400000L)))
         .toDF("role", "ts")
       stageOrderedFile(sentinel, s"$tmp/sent", watched, "sentinel.parquet",
-        1700000000000L + (nChunks + 1) * 10000L)
+        replayMtime(chunks.n + 1))
       val name = freshStreamView(s, "stream_anom_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[HourEvent]
-          StreamingFeatures.volumeAnomalyLive(src,
-              bucketSeconds = 3600L, trailing = 24, factor = 2L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.volumeAnomalyLive(
+          replayStream(s, chunks.schema, watched).as[HourEvent],
+          bucketSeconds = 3600L, trailing = 24, factor = 2L)
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name)
         .select("role", "bucket", "n", "trail_n", "trail_sum", "is_spike")
     }),
@@ -1878,17 +1779,8 @@ object SparkEntry {
       val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"role", $"ts")
       val maxTs = t.agg(max($"ts")).head().getTimestamp(0).getTime
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val chunks = new ReplayChunks(t, 4, Seq("ts", "conv_id"))
+      chunks.stage(s"$tmp/scratch", watched)
       // watermark 600 s + window 300 s + margin, twice (watermark lags
       // one batch)
       val step = (600L + 300L + 10L) * 1000L
@@ -1897,25 +1789,14 @@ object SparkEntry {
           new java.sql.Timestamp(maxTs + i * step)))
           .toDF("conv_id", "role", "ts")
         stageOrderedFile(sentinel, s"$tmp/sent$i", watched,
-          s"sentinel-$i.parquet", 1700000000000L + (nChunks + i) * 10000L)
+          s"sentinel-$i.parquet", replayMtime(chunks.n + i))
       }
       val name = freshStreamView(s, "stream_win_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          StreamingFeatures.windowedRoleCounts(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.windowedRoleCounts(
+          replayStream(s, chunks.schema, watched))
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).filter($"role" =!= "__wm__")
         .select(col("window.start").cast("long").as("w_start_sec"),
           col("role"), col("n"))
@@ -1942,35 +1823,14 @@ object SparkEntry {
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       val hashed = union.select(
         col("doc_id"), md5(col("text").cast("binary")).as("hash"))
-      val nChunks = 4
-      val ordered = hashed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("hash"), col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(hashed, 4, Seq("hash", "doc_id"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_dedup_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(hashed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[DocEvent]
-          StreamingFeatures.dedupExact(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(StreamingFeatures.dedupExact(
+          replayStream(s, schema, watched).as[DocEvent])
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select(
         col("doc_id"), col("hash"), col("kept").cast("long").as("kept"))
     }),
@@ -1986,34 +1846,14 @@ object SparkEntry {
         .createTempDirectory("graft_verify_streamhll").toString
       val watched = s"$tmp/watched"
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val nChunks = 4
-      val ordered = d.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(d, 4, Seq("doc_id"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_hll_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(d.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          graft.ops.Sketches.hllRegisters(src, col("text"), p = 8)
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(graft.ops.Sketches.hllRegisters(
+          replayStream(s, schema, watched), col("text"), p = 8)
+        .writeStream.outputMode("complete").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select(col("bucket"), col("max_rho"))
     }),
 
@@ -2169,38 +2009,15 @@ object SparkEntry {
       val sink = s"$tmp/sink"
       val ckpt = s"$tmp/ckpt"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      def stage(i: Int): Unit =
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      def runOnce(): Unit = {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try {
-            val src = s.readStream
-              .schema(t.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(watched)
-              .as[TurnToolEvent]
-            StreamingFeatures.locf(src)
-              .writeStream.outputMode("append").format("parquet")
-              .option("path", sink)
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try q.awaitTermination() finally q.stop()
-      }
-      (1 to 2).foreach(stage)
+      val chunks = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+      def runOnce(): Unit = runReplay(s)(StreamingFeatures.locf(
+          replayStream(s, chunks.schema, watched).as[TurnToolEvent])
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt))
+      chunks.stage(s"$tmp/scratch", watched, 1 to 2)
       runOnce() // first run drains the staged half, then stops (the kill)
-      (3 to 4).foreach(stage)
+      chunks.stage(s"$tmp/scratch", watched, 3 to 4)
       runOnce() // restart: recovered state + only the new files
       s.read.parquet(sink).select("conv_id", "turn_idx", "tool_locf")
     }),
@@ -2225,38 +2042,16 @@ object SparkEntry {
       val sink = s"$tmp/sink"
       val ckpt = s"$tmp/ckpt"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      val base = 1700000000000L
-      def stage(i: Int): Unit =
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet", base + i * 10000L)
-      def runOnce(): Unit = {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try {
-            val src = s.readStream
-              .schema(t.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(watched)
-              .as[TurnEvent]
-            StreamingFeatures.sessionize(src, gapSeconds = 1800L)
-              .writeStream.outputMode("append").format("parquet")
-              .option("path", sink)
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try q.awaitTermination() finally q.stop()
-      }
-      (1 to 2).foreach(stage)
+      val chunks = new ReplayChunks(t, 4, Seq("ts", "conv_id", "turn_idx"))
+      def runOnce(): Unit = runReplay(s)(StreamingFeatures.sessionize(
+          replayStream(s, chunks.schema, watched).as[TurnEvent],
+          gapSeconds = 1800L)
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt))
+      chunks.stage(s"$tmp/scratch", watched, 1 to 2)
       runOnce() // the kill: open sessions are live in the state store here
-      (3 to 4).foreach(stage)
+      chunks.stage(s"$tmp/scratch", watched, 3 to 4)
       val maxTs = t.agg(max($"ts")).as[java.sql.Timestamp].head().getTime
       val step = (1800L + 600L + 10L) * 1000L
       (1 to 2).foreach { i =>
@@ -2264,7 +2059,7 @@ object SparkEntry {
           Seq(TurnEvent("__wm__", i - 1, "user",
             new java.sql.Timestamp(maxTs + i * step))).toDS().toDF(),
           s"$tmp/scratch_wm$i", watched, s"wm-$i.parquet",
-          base + (nChunks + i) * 10000L)
+          replayMtime(chunks.n + i))
       }
       runOnce() // restart: recovered open sessions + remaining files
       s.read.parquet(sink).filter($"conv_id" =!= "__wm__")
@@ -2556,35 +2351,16 @@ object SparkEntry {
       val delta = d.filter(col("doc_id") % 3 === 0)
         .select("doc_id", "text")
       val watched = s"$tmp/watched"
-      val nChunks = 3
-      val ordered = delta.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(delta, 3, Seq("doc_id"))
+        .stage(s"$tmp/scratch", watched)
       val view = freshStreamView(s, "q_stream_neardup_sink_")
-      // state partitions sized to the replay (q_stream_sessionize_files
-      // pattern): per-batch floor is store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = graft.streaming.StreamingFeatures.nearDupFlags(
-            s.readStream.schema(delta.schema)
-              .option("maxFilesPerTrigger", "1").parquet(watched),
-            s.read.parquet(s"$tmp/idx_hashes"),
-            s.read.parquet(s"$tmp/idx_bands"),
-            "doc_id", "text")
-          .writeStream.outputMode("append")
-          .format("memory").queryName(view)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      runReplay(s)(graft.streaming.StreamingFeatures.nearDupFlags(
+          replayStream(s, schema, watched),
+          s.read.parquet(s"$tmp/idx_hashes"),
+          s.read.parquet(s"$tmp/idx_bands"),
+          "doc_id", "text")
+        .writeStream.outputMode("append")
+        .format("memory").queryName(view))
       s.table(view)
     }),
 
@@ -3072,29 +2848,16 @@ object SparkEntry {
         .select(col("conv_id"), col("turn_idx"), col("tool"), col("ts"))
       val dim = t.filter(col("tool").isNotNull).select(col("tool")).distinct()
         .withColumn("tool_cat", substring(col("tool"), 6, 1))
-      val nChunks = 3
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(t, 3, Seq("ts", "conv_id", "turn_idx"))
+        .stage(s"$tmp/scratch", watched)
       val view = freshStreamView(s, "q_stream_enrich_sink_")
-      val q = s.readStream
-        .schema(t.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watched)
+      // no replay partition pin: the stateless broadcast join keeps the
+      // session's count
+      drainAvailableNow(replayStream(s, schema, watched)
         .join(broadcast(dim), Seq("tool"))
         .select(col("conv_id"), col("turn_idx"), col("tool"), col("tool_cat"))
         .writeStream.outputMode("append")
-        .format("memory").queryName(view)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
+        .format("memory").queryName(view))
       s.table(view)
     }),
 
@@ -3121,49 +2884,24 @@ object SparkEntry {
       val rBatch = t.filter(col("tool").isNotNull)
         .select(col("conv_id"), col("turn_idx").as("t_turn_idx"),
           col("tool"), col("ts").as("t_ts"))
-      def stageStream(df: DataFrame, tsCol: String, sub: String): String = {
-        val watched = s"$tmp/$sub"
-        // 2 files/side = 4 micro-batches total: still proves cross-batch
-        // matching on both sides while halving the replay's state-commit
-        // cadence (this query was the bench replay tail at 3/side)
-        val nChunks = 2
-        val ordered = df.withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col(tsCol))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        (1 to nChunks).foreach { i =>
-          stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-            s"$tmp/scratch_${sub}_$i", watched, s"chunk-$i.parquet",
-            1700000000000L + i * 10000L)
-        }
-        watched
-      }
-      val watchedL = stageStream(lBatch, "u_ts", "left")
-      val watchedR = stageStream(rBatch, "t_ts", "right")
+      // 2 files/side = 4 micro-batches total: still proves cross-batch
+      // matching on both sides while halving the replay's state-commit
+      // cadence (this query was the bench replay tail at 3/side)
+      def replaySide(df: DataFrame, tsCol: String, sub: String): DataFrame =
+        replayStream(s, new ReplayChunks(df, 2, Seq(tsCol))
+          .stage(s"$tmp/scratch_${sub}_", s"$tmp/$sub"), s"$tmp/$sub")
+      val lStream = replaySide(lBatch, "u_ts", "left")
+      val rStream = replaySide(rBatch, "t_ts", "right")
       val view = freshStreamView(s, "q_stream_join_sink_")
-      val lStream = s.readStream.schema(lBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watchedL)
-      val rStream = s.readStream.schema(rBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watchedR)
-      // state partitions sized to the replay (the q_stream_sessionize_files
-      // pattern): a stream-stream join runs 4 state-store instances per
-      // shuffle partition per batch, so the replay's per-batch floor is
-      // store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = StreamingFeatures
-          .intervalJoin(lStream, "u_ts", rStream, "t_ts", "conv_id",
-            windowSec = 3600L, watermark = "2 hours")
-          .select(col("conv_id"), col("u_turn_idx"), col("t_turn_idx"),
-            col("tool"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(view)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // a stream-stream join runs 4 state-store instances per shuffle
+      // partition per batch: the replay partition count matters most here
+      runReplay(s)(StreamingFeatures
+        .intervalJoin(lStream, "u_ts", rStream, "t_ts", "conv_id",
+          windowSec = 3600L, watermark = "2 hours")
+        .select(col("conv_id"), col("u_turn_idx"), col("t_turn_idx"),
+          col("tool"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName(view))
       s.table(view)
     }),
 
@@ -3564,34 +3302,15 @@ object SparkEntry {
         col("doc_id"),
         md5(col("text").cast("binary")).as("hash"),
         timestamp_seconds(lit(1700000000L) + (col("doc_id") % 900L)).as("ts"))
-      val nChunks = 4
-      val ordered = hashed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("hash"), col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(hashed, 4, Seq("hash", "doc_id"))
+        .stage(s"$tmp/scratch", watched)
       val view = freshStreamView(s, "stream_dedup_wm_")
-      val src = s.readStream.schema(hashed.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watched)
-      // state partitions sized to the replay (q_stream_sessionize_files
-      // pattern): per-batch floor is store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = StreamingFeatures
-          .dedupWithinWatermark(src, "ts", Seq("hash"), "1 hour")
-          .select(col("doc_id"), col("hash"))
-          .writeStream.outputMode("append").format("memory").queryName(view)
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      runReplay(s)(StreamingFeatures
+        .dedupWithinWatermark(replayStream(s, schema, watched), "ts",
+          Seq("hash"), "1 hour")
+        .select(col("doc_id"), col("hash"))
+        .writeStream.outputMode("append").format("memory").queryName(view)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(view)
     }),
 
@@ -3669,39 +3388,21 @@ object SparkEntry {
         .createTempDirectory("graft_verify_streamcms").toString
       val watched = s"$tmp/watched"
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val nChunks = 4
-      val ordered = d.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(d, 4, Seq("doc_id"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_cms_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(d.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          val keyed = src.filter(col("text").isNotNull)
-            .select(explode(split(lower(col("text")), " ")).as("word"))
-            .filter(col("word") =!= "")
-            .select(conv(substring(md5(col("word").cast("binary")), 1, 15),
-              16, 10).cast("long").as("k"))
-          graft.ops.Sketches.cmsBuild(keyed, col("k"), 3, 32)
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s) {
+        val keyed = replayStream(s, schema, watched)
+          .filter(col("text").isNotNull)
+          .select(explode(split(lower(col("text")), " ")).as("word"))
+          .filter(col("word") =!= "")
+          .select(conv(substring(md5(col("word").cast("binary")), 1, 15),
+            16, 10).cast("long").as("k"))
+        graft.ops.Sketches.cmsBuild(keyed, col("k"), 3, 32)
+          .writeStream.outputMode("complete").format("memory")
+          .queryName(name)
+          .option("checkpointLocation", s"$tmp/ckpt")
+      }
       s.table(name).select(col("row_idx"), col("counter_idx"), col("cnt"))
     }),
 
@@ -3809,34 +3510,14 @@ object SparkEntry {
           when(col("event_type") === "error" &&
               col("ts") >= lit("2024-01-16").cast("timestamp"), "d")
             .otherwise("u").as("op"))
-      val nChunks = 4
-      val ordered = feed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("event_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
+      val schema = new ReplayChunks(feed, 4, Seq("event_id"))
+        .stage(s"$tmp/scratch", watched)
       val name = freshStreamView(s, "stream_cdc_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(feed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          graft.ops.Snapshot.latestWins(src, "user_id", Seq("ts", "event_id"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
+      runReplay(s)(graft.ops.Snapshot.latestWins(
+          replayStream(s, schema, watched), "user_id", Seq("ts", "event_id"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName(name)
+        .option("checkpointLocation", s"$tmp/ckpt"))
       s.table(name).select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"), col("op"))
     }),

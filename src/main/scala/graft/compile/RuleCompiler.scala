@@ -113,7 +113,7 @@ object RuleCompiler {
   /** Errors column for a whole DataFrame row under `spec`. */
   def compileTop(df: DataFrame, spec: WarySpec): Column = {
     val schema = df.schema
-    compileStruct(name => col(name), n => schema(n).dataType, spec, Nil)
+    compileStruct(name => col(name), n => schema(n).dataType, spec, array())
   }
 
   /** Errors for a STRUCT COLUMN under `spec` (the Dive shape, exposed for
@@ -126,21 +126,24 @@ object RuleCompiler {
       spec: WarySpec,
       basePath: Seq[String] = Nil
   ): Column =
-    compileStruct(
-      name => value.getField(name), n => st(n).dataType, spec, basePath)
+    compileStruct(name => value.getField(name), n => st(n).dataType, spec,
+      array(basePath.map(lit): _*))
 
   /** Shared by top-level rows and `Dive` recursion: `get`/`dtOf` abstract
-    * over col(name) vs struct.getField(name).
+    * over col(name) vs struct.getField(name). `basePath` is a column so a
+    * dive under `inner` keeps its runtime element index; a transparent
+    * field adds no segment to it.
     */
   private def compileStruct(
       get: String => Column,
       dtOf: String => DataType,
       spec: WarySpec,
-      basePath: Seq[String]
+      basePath: Column
   ): Column =
     concatErrs(spec.fields.map { f =>
-      val segs = if (f.transparent) basePath else basePath :+ f.pathName
-      val path = array(segs.map(lit): _*)
+      val path =
+        if (f.transparent) basePath
+        else concat(basePath, array(lit(f.pathName)))
       compileField(get(f.name), dtOf(f.name), path, f.rules)
     })
 
@@ -495,11 +498,8 @@ object RuleCompiler {
         case other =>
           throw new IllegalArgumentException(s"dive on non-struct $other")
       }
-      // rebuild with struct-relative accessors and extended base path
-      concatErrs(spec.fields.map { f =>
-        val p = concat(path, array(lit(f.pathName)))
-        compileField(value.getField(f.name), st(f.name).dataType, p, f.rules)
-      })
+      compileStruct(
+        name => value.getField(name), n => st(n).dataType, spec, path)
 
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Temporal-leakage guarantee: an anchor can only see right rows that sort
   * before it, i.e. right.ts < anchor.ts, or right.ts == anchor.ts when
   * `allowExactMatches` (never right.ts > anchor.ts). Property-tested in
-  * AsOfSpec.
+  * LeakagePropertySpec.
   *
   * Scale: the single hash shuffle partitions by key; AQE handles moderate
   * skew (one giant key within a partition stays a single-pass sort). A
@@ -208,7 +208,7 @@ object AsOf {
     * feed's rows ride the same timeline union tagged with their own
     * payload column; k `last(ignoreNulls)` carries share one window spec,
     * so Catalyst evaluates ALL feeds in a single Window exec over a
-    * single sort (plan-asserted in AsOfSpec).
+    * single sort (plan-asserted in FeatureSpec).
     *
     * Semantics per feed = [[joinBackward]] with exact matches allowed:
     * latest feed row with feed.ts <= anchor.ts, per `keys`; unmatched →

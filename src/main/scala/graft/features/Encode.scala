@@ -20,11 +20,12 @@ import org.apache.spark.sql.functions._
   * shape as [[graft.ops.Curation.packShards]] / [[LocfScalable]]: a
   * range frame within (key, time-chunk) plus an exclusive running carry
   * over per-chunk totals, so a key's history parallelizes across
-  * chunks. [[targetEncodeSingleWindow]] is kept as the differential twin.
+  * chunks. The single-window formulation is the differential twin in
+  * `EncodeSpec` (test scope).
   */
 object Encode {
 
-  private def guardedEpoch(ts: Column): Column = {
+  private[features] def guardedEpoch(ts: Column): Column = {
     val e = ts.cast("long")
     when(e.isNotNull, e).otherwise(raise_error(lit(
       "Encode: null order value — the order column must be non-null")))
@@ -108,28 +109,6 @@ object Encode {
       .drop("__te_epoch", "__te_chunk", "__te_lbl", "__te_cc", "__te_cs",
         "__te_jchunk")
       .drop(keys.map(k => s"__te_j_$k"): _*)
-  }
-
-  /** Single-window reference formulation — one task per key, kept as the
-    * differential-test twin (EncodeSpec asserts byte-equality with the
-    * two-phase default on random inputs) and for callers whose keys are
-    * known small.
-    */
-  def targetEncodeSingleWindow(
-      df: DataFrame,
-      keys: Seq[String],
-      tsCol: String,
-      label: Column,
-      cntAs: String = "enc_cnt",
-      sumAs: String = "enc_sum"
-  ): DataFrame = {
-    require(keys.nonEmpty, "targetEncode needs at least one key column")
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(guardedEpoch(col(tsCol)))
-      .rangeBetween(Window.unboundedPreceding, -1)
-    val lbl = label.cast("long")
-    df.withColumn(cntAs, coalesce(count(lbl).over(w), lit(0L)))
-      .withColumn(sumAs, sum(lbl).over(w))
   }
 
   /** Exact per-group rank features: for every row, its min-rank among the

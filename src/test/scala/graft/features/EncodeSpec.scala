@@ -1,5 +1,7 @@
 package graft.features
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +54,8 @@ class EncodeSpec extends AnyFunSuite {
       .as[(Int, Long, Option[Long])].collect().sortBy(_._1).toSeq
     // deliberately tiny chunks so carries actually fire
     val two = canon(Encode.targetEncode(df, Seq("k"), "ts", $"v", 7L))
-    val one = canon(Encode.targetEncodeSingleWindow(df, Seq("k"), "ts", $"v"))
+    val one =
+      canon(EncodeSpec.targetEncodeSingleWindow(df, Seq("k"), "ts", $"v"))
     assert(two == one)
   }
 
@@ -103,5 +106,28 @@ class EncodeSpec extends AnyFunSuite {
     // roughly balanced (fmix64 is uniform; 1000 ids, 5 folds)
     assert(perFold.values.forall(n => n > 130 && n < 270), perFold)
     intercept[IllegalArgumentException] { Encode.foldAssign(df, $"conv", 3) }
+  }
+}
+
+object EncodeSpec {
+
+  /** [[Encode.targetEncode]] as one strict-past range frame per key (one
+    * task per key): the differential twin of the two-phase default.
+    */
+  def targetEncodeSingleWindow(
+      df: DataFrame,
+      keys: Seq[String],
+      tsCol: String,
+      label: Column,
+      cntAs: String = "enc_cnt",
+      sumAs: String = "enc_sum"
+  ): DataFrame = {
+    require(keys.nonEmpty, "targetEncode needs at least one key column")
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(Encode.guardedEpoch(col(tsCol)))
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val lbl = label.cast("long")
+    df.withColumn(cntAs, coalesce(count(lbl).over(w), lit(0L)))
+      .withColumn(sumAs, sum(lbl).over(w))
   }
 }

@@ -19,6 +19,18 @@ class AsyncAndTransparentSpec extends AnyFunSuite {
     assert(path == Seq.empty)
   }
 
+  test("transparent field under dive keeps only the parent's path") {
+    // a #[wary(transparent)] newtype reached through #[wary(dive)]: the
+    // newtype's `_0` adds no segment, so the error sits at ["name"]
+    val spec = WarySpec(Seq(FieldSpec("name", rules = Seq(Dive(WarySpec(Seq(
+      FieldSpec("_0", rules = Seq(AsciiRule), transparent = true))))))))
+    val df = Seq("héllo").toDF("v")
+      .selectExpr("named_struct('_0', v) AS name")
+    val path = WaryGate(df, spec).selectExpr("errors[0].path")
+      .collect().head.getSeq[String](0)
+    assert(path == Seq("name"))
+  }
+
   test("batched async-substitute rule appends to the errors report") {
     val spec = WarySpec(Seq(FieldSpec("v", rules = Seq(Required()))))
     val gated = WaryGate(
